@@ -1,4 +1,4 @@
-"""Shared frame utilities: melt, transpose, pairwise reduce.
+"""Shared frame utilities: melt, transpose, pairwise reduce, local frames.
 
 Reference parity: flatten_dataframe / transpose_dataframe / pairwise_reduce
 (reference: shared/utils.py:6-45, 113-132), rebuilt on modern primitives
@@ -10,8 +10,9 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def ensure_list(x) -> list:
@@ -77,9 +78,57 @@ def union_by_name(dfs: list[DataFrame]) -> DataFrame:
     return pairwise_reduce(lambda a, b: a.unionByName(b, allowMissingColumns=False), dfs)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side Python rows as a JVM ``LocalRelation``.
+
+    ``spark.createDataFrame(<list>)`` plans a ``LogicalRDD`` over a
+    PythonRDD: every action on the frame starts ``defaultParallelism``
+    Python-worker tasks (~0.2 s of CPU each on a 4-core box, against ~3 ms
+    for a JVM task) just to unpickle a few rows, and the plan carries no
+    size statistics, so a join against it is never planned as a
+    broadcast.  An Arrow table crosses to the JVM once, at construction,
+    and lands as a ``LocalRelation`` with real statistics — whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set.
+
+    ``rows`` are tuples (or lists / Rows) in ``schema`` order; ``schema``
+    is a ``StructType`` or a DDL string.  Columns are built with one
+    ``pa.array`` each, never through pandas, so NaN and null stay
+    distinct.  Top-level timestamp and date values go through Spark's own
+    ``toInternal``, so a naive datetime means what it means to
+    ``createDataFrame(<list>)``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    struct = schema if isinstance(schema, T.StructType) else T._parse_datatype_string(schema)
+    if not isinstance(struct, T.StructType):
+        raise ValueError(f"local_frame needs a struct schema, got {schema!r}")
+    rows = list(rows)
+    width = len(struct.fields)
+    for r in rows:
+        if len(r) != width:
+            raise ValueError(
+                f"local_frame: row {r!r} has {len(r)} values, schema has {width} fields"
+            )
+    columns = list(zip(*rows)) if rows else [()] * width
+    arrays = []
+    for f, values in zip(struct.fields, columns):
+        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType, T.DateType)):
+            physical = pa.int32() if isinstance(f.dataType, T.DateType) else pa.int64()
+            internal = [None if v is None else f.dataType.toInternal(v) for v in values]
+            arrays.append(pa.array(internal, physical).cast(to_arrow_type(f.dataType)))
+        else:
+            arrays.append(pa.array(values, to_arrow_type(f.dataType)))
+    table = pa.Table.from_arrays(arrays, names=struct.names)
+    return spark.createDataFrame(table, schema=struct)
+
+
 def fan_out(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the session's default parallelism when
-    the plan arrives with FEWER partitions than cores.
+    """Hash-repartition up to the session's default parallelism when the
+    plan arrives with FEWER partitions than cores.  The key is a synthetic
+    per-row hash, ``xxhash64(monotonically_increasing_id())``, so even
+    fully identical rows spread evenly and no local sort is paid (see the
+    comment at the repartition below).
 
     Why: a table small enough to sit in one parquet row group scans as ONE
     task, so a wide aggregation (30 corr pairs, a full stats battery, exact
@@ -91,6 +140,11 @@ def fan_out(df: DataFrame) -> DataFrame:
     percentiles, exact distincts, wide co-moment batteries): the probe is
     free but the extra exchange costs ~1 s of first-run codegen, which a
     cheap sketch-based aggregation never earns back.
+
+    It is also what sizes the engine's Arrow stages (``mapInPandas`` GEMMs):
+    the stage gets one task per core, picked from the input's size and the
+    core count, never a caller-chosen partition count that would run a
+    100-row stage in several waves of Python-worker tasks.
     """
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism

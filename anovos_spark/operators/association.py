@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from anovos_spark.core.typing import resolve_columns
-from anovos_spark.core.utils import melt
+from anovos_spark.core.utils import local_frame, melt
 
 
 def correlation_matrix(
@@ -58,8 +58,8 @@ def correlation_matrix(
             for j, b in enumerate(cols):
                 v = float(m[i][j])
                 data.append((a, b, 1.0 if i == j else round(v, 6)))
-        return idf.sparkSession.createDataFrame(
-            data, schema="attribute1 string, attribute2 string, corr double"
+        return local_frame(
+            idf.sparkSession, data, "attribute1 string, attribute2 string, corr double"
         )
 
     pairs = list(itertools.combinations(cols, 2))
@@ -72,8 +72,8 @@ def correlation_matrix(
         v = row[f"{a}|{b}"]
         data.append((a, b, v))
         data.append((b, a, v))
-    return idf.sparkSession.createDataFrame(
-        data, schema="attribute1 string, attribute2 string, corr double"
+    return local_frame(
+        idf.sparkSession, data, "attribute1 string, attribute2 string, corr double"
     )
 
 

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from anovos_spark.core.utils import local_frame
+
 _REPORT_SCHEMA = (
     "rule_idx int, rule_type string, attribute string, "
     "observed double, threshold double, passed int"
@@ -150,4 +152,4 @@ def validate_constraints(
             passed = obs <= thr
             attr = r["col"]
         report.append((i, t, attr, round(float(obs), 6), thr, int(passed)))
-    return idf.sparkSession.createDataFrame(report, schema=_REPORT_SCHEMA)
+    return local_frame(idf.sparkSession, report, schema=_REPORT_SCHEMA)

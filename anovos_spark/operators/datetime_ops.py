@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from anovos_spark.core.utils import ensure_list
+from anovos_spark.core.utils import ensure_list, local_frame
 
 _FACTORS = {"second": 1, "minute": 60, "hour": 3600, "day": 86400, "week": 604800}
 
@@ -631,7 +631,8 @@ def benford_check(
     # a digit with ZERO observations must still emit its row: its χ² term
     # is tot·P(d), and dropping it silently under-counts the statistic
     # (same empty-group class as the funnel step fix)
-    full = idf.sparkSession.createDataFrame(
+    full = local_frame(
+        idf.sparkSession,
         [(c, d) for c in cols for d in range(1, 10)],
         schema="attribute string, digit int",
     )

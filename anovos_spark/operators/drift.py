@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from anovos_spark.core.typing import resolve_columns
-from anovos_spark.core.utils import melt, union_by_name
+from anovos_spark.core.utils import local_frame, melt, union_by_name
 
 
 def drift_statistics(
@@ -309,7 +309,8 @@ def feature_stability_estimation(
         else None
     )
     spark = attribute_stats.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("g", mean_cv, sd_cv, None, m_si, s_si, None, si,
           int(si is not None and si < threshold))],
         schema=(

@@ -25,6 +25,8 @@ from collections import Counter
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from anovos_spark.core.utils import fan_out, local_frame
+
 # (feature_name, industry, usecase, description) — original content
 DEFAULT_CORPUS: list[tuple[str, str, str, str]] = [
     ("customer_income_level", "finance", "credit scoring", "annual income level of the customer"),
@@ -121,10 +123,7 @@ def feature_recommender_match(
     integer df counts and scalar ln/√ arithmetic, so scores are unchanged."""
     spark = attr_df.sparkSession
     if corpus_df is None:
-        corpus_df = spark.createDataFrame(
-            DEFAULT_CORPUS,
-            schema="feature_name string, industry string, usecase string, description string",
-        )
+        corpus_df = _corpus_df(spark)
     crows = corpus_df.select(
         "feature_name", "industry", "usecase", "description"
     ).collect()
@@ -154,10 +153,12 @@ def feature_recommender_match(
         for fname, ind, use, toks in row_toks
         for t in toks
     ]
-    idf = spark.createDataFrame(
+    idf = local_frame(
+        spark,
         sorted(idf_map.items()), schema="token string, idf double"
     )
-    corpus_weighted = spark.createDataFrame(
+    corpus_weighted = local_frame(
+        spark,
         corpus_weighted_rows,
         schema="token string, feature_name string, industry string, "
                "usecase string, w double, cn double",
@@ -340,10 +341,7 @@ def feature_recommender_match_distributional(
     corpus (feature_exploration/feature_recommender.py) are unique-keyed."""
     spark = attr_df.sparkSession
     if corpus_df is None:
-        corpus_df = spark.createDataFrame(
-            DEFAULT_CORPUS,
-            schema="feature_name string, industry string, usecase string, description string",
-        )
+        corpus_df = _corpus_df(spark)
     lex = SYNONYM_LEXICON if lexicon is None else lexicon
 
     # ---- corpus word tokens (no trigrams: PPMI is word co-occurrence) --
@@ -421,7 +419,8 @@ def feature_recommender_match_distributional(
     tok_vec_rows += [
         (t, c2, idf_map[t] * v / math.sqrt(pn2[t])) for (t, c2), v in pp.items()
     ]
-    tok_vec = spark.createDataFrame(
+    tok_vec = local_frame(
+        spark,
         tok_vec_rows, schema="t string, c string, v double"
     )
     # corpus document vectors + norms (wt = 1 per token row, multiplicity
@@ -437,7 +436,8 @@ def feature_recommender_match_distributional(
                 dv[c2] = dv.get(c2, 0.0) + mt * v
         cn = math.sqrt(sum(x * x for x in dv.values()))
         cvec_rows += [(fname, c2, x, cn) for c2, x in dv.items()]
-    cvec = spark.createDataFrame(
+    cvec = local_frame(
+        spark,
         cvec_rows, schema="feature_name string, c string, dv double, cn double"
     )
 
@@ -484,7 +484,7 @@ def feature_recommender_match_distributional(
     # the same rows with no generated code at all; inner-join semantics
     # are row-identical to the map lookup (absent key → dropped row).
     lex_rows = [(k, e) for k, exps in sorted(lex.items()) for e in exps]
-    lex_df = spark.createDataFrame(lex_rows, schema="__lk__ string, __le__ string")
+    lex_df = local_frame(spark, lex_rows, schema="__lk__ string, __le__ string")
     a_exp = (
         a_self.select("attribute", "token")
         .join(F.broadcast(lex_df), F.col("token") == F.col("__lk__"))
@@ -622,7 +622,8 @@ def _sentence_transformer_embeddings(
     c_rows = corpus_df.collect()
     c_vecs = model.encode([f"{r['feature_name']} {r['description']}" for r in c_rows])
     spark = corpus_df.sparkSession
-    corpus_emb = spark.createDataFrame(
+    corpus_emb = local_frame(
+        spark,
         [
             (r["feature_name"], r["industry"], r["usecase"], [float(x) for x in v])
             for r, v in zip(c_rows, c_vecs)
@@ -685,10 +686,7 @@ def feature_recommender_match_embedded(
 
     spark = attr_df.sparkSession
     if corpus_df is None:
-        corpus_df = spark.createDataFrame(
-            DEFAULT_CORPUS,
-            schema="feature_name string, industry string, usecase string, description string",
-        )
+        corpus_df = _corpus_df(spark)
 
     if attr_emb_col and corpus_emb_col:
         # bring-your-own embeddings may carry nulls — no geometry, excluded
@@ -761,7 +759,12 @@ def feature_recommender_match_embedded(
                 }
             )
 
-    scored = attr_emb.mapInPandas(
+    # fan_out sizes the Arrow stage from the input's size and the core
+    # count: a single-partition attribute frame (e.g. an orderBy().limit()
+    # cap, planned as TakeOrdered) would otherwise run the GEMM on one
+    # worker, and a caller-chosen partition count on a 100-row input would
+    # run several waves of Python-worker tasks
+    scored = fan_out(attr_emb).mapInPandas(
         score_blocks,
         schema="attribute string, feature_name string, industry string, "
         "usecase string, score double",
@@ -822,7 +825,8 @@ def list_feature_by_usecase(
 
 
 def _corpus_df(spark, corpus=None) -> DataFrame:
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         corpus or DEFAULT_CORPUS,
         schema="feature_name string, industry string, usecase string, description string",
     )

@@ -29,9 +29,9 @@ _COLS = ("feature_name", "industry", "usecase", "description")
 
 
 def _default_corpus(spark) -> DataFrame:
-    from anovos_spark.operators.featrec import DEFAULT_CORPUS
+    from anovos_spark.operators.featrec import _corpus_df
 
-    return spark.createDataFrame(DEFAULT_CORPUS, schema=list(_COLS))
+    return _corpus_df(spark)
 
 
 def _normalize(s: str) -> str:

@@ -28,6 +28,8 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from anovos_spark.core.utils import local_frame
+
 EARTH_RADIUS_KM = 6371.0088
 
 _GH32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -879,9 +881,7 @@ def geo_density_clusters(
                 min_of_root[r] = c
         root_id = {m: i for i, m in enumerate(sorted(min_of_root.values()))}
         labels = [(x, y, root_id[min_of_root[find((x, y))]]) for (x, y) in dense]
-        label_df = spark.createDataFrame(
-            labels, schema="__cx__ long, __cy__ long, __lbl__ int"
-        )
+        label_df = local_frame(spark, labels, "__cx__ long, __cy__ long, __lbl__ int")
     else:
         label_df = _dense_labels_distributed(dense_df)
     # distributed border labeling: explode each dense cell's label into

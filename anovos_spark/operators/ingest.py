@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from anovos_spark.core.utils import ensure_list, pairwise_reduce
+from anovos_spark.core.utils import ensure_list, local_frame, pairwise_reduce
 
 JOIN_TYPES = {"inner", "full", "left", "right", "left_semi", "left_anti", "cross", "outer"}
 
@@ -312,7 +312,8 @@ def attribute_type_recommendation(
             F.round(F.try_divide(castable, F.count(F.col(c))), 6).alias(f"{c}__numrate")
         )
     if not aggs:
-        return idf.sparkSession.createDataFrame(
+        return local_frame(
+            idf.sparkSession,
             [],
             schema="attribute string, current_type string, recommended_type string, "
             "distinct_count long, numeric_rate double",
@@ -333,7 +334,8 @@ def attribute_type_recommendation(
         r = row[f"{c}__numrate"]
         rec = "numerical" if r is not None and r >= numeric_parse_rate else "categorical"
         data.append((c, "categorical", rec, None, r))
-    return idf.sparkSession.createDataFrame(
+    return local_frame(
+        idf.sparkSession,
         data,
         schema="attribute string, current_type string, recommended_type string, "
         "distinct_count long, numeric_rate double",

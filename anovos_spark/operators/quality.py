@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anovos_spark.core.typing import resolve_columns
-from anovos_spark.core.utils import fan_out, melt
+from anovos_spark.core.utils import fan_out, local_frame, melt
 
 
 # --------------------------------------------------------------------------- #
@@ -49,7 +49,8 @@ def duplicate_detection(
     r = agg.collect()[0]
     total = int(r["total_rows"] or 0)
     uniq = int(r["unique_rows"] or 0)
-    stats = spark.createDataFrame(
+    stats = local_frame(
+        spark,
         [
             ("rows_count", total),
             ("unique_rows_count", uniq),
@@ -257,7 +258,8 @@ def outlier_detection(
         )
         aggs += [lo.alias(f"{c}__lower_outliers"), hi.alias(f"{c}__upper_outliers")]
     row = idf.agg(*aggs).collect()[0]
-    stats = spark.createDataFrame(
+    stats = local_frame(
+        spark,
         [
             (c, int(row[f"{c}__lower_outliers"] or 0), int(row[f"{c}__upper_outliers"] or 0))
             for c in cols

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from anovos_spark.core.utils import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -590,7 +592,7 @@ def ivf_build_index(
     cent_rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    spark.createDataFrame(cent_rows, "cell int, centroid array<double>").coalesce(
+    local_frame(spark, cent_rows, "cell int, centroid array<double>").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/centroids")
     model.transform(corp).select("neighbor_id", "cv", "cn", "cell").write.mode(

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from anovos_spark.core.typing import discrete_columns, resolve_columns
-from anovos_spark.core.utils import fan_out, melt
+from anovos_spark.core.utils import fan_out, local_frame, melt
 
 
 def _stack_wide_row(
@@ -67,7 +67,7 @@ def global_summary(idf: DataFrame) -> DataFrame:
         ("catcols_count", str(len(cat_cols))),
         ("othercols_count", str(len(other_cols))),
     ]
-    return spark.createDataFrame(data, schema="metric string, value string")
+    return local_frame(spark, data, schema="metric string, value string")
 
 
 def missing_count(idf: DataFrame, list_of_cols="all", drop_cols=()) -> DataFrame:
@@ -606,7 +606,8 @@ def measures_of_robustness(
         )
         for c in cols
     ]
-    return idf.sparkSession.createDataFrame(
+    return local_frame(
+        idf.sparkSession,
         data,
         schema="attribute string, median double, mad double, "
         "mad_scaled double, robust_outliers long",

@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from anovos_spark.core.utils import ensure_list
+from anovos_spark.core.utils import ensure_list, local_frame
 
 
 # Atomic types Spark cannot sort (DATATYPE_MISMATCH.INVALID_ORDERING_TYPE):
@@ -565,7 +565,8 @@ def funnel(
     )
     # a step nobody reaches must still appear with n_users = 0 (groupBy
     # alone silently drops it — the funnel contract is one row PER STEP)
-    step_frame = idf.sparkSession.createDataFrame(
+    step_frame = local_frame(
+        idf.sparkSession,
         list(enumerate(steps)), schema="step_idx int, step string"
     )
     counts = step_frame.join(counts, ["step_idx", "step"], "left_outer").select(

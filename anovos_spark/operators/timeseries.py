@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from anovos_spark.core.utils import ensure_list
+from anovos_spark.core.utils import ensure_list, local_frame
 
 # candidate formats, ordered by specificity (first winning format is used;
 # covers the reference grammar's length-{4,6,8,10,13} families)
@@ -222,7 +222,7 @@ def ts_eligibility_check(
         ("gap_stddev", g["gap_stddev"]),
         ("gap_cov", cov),
     ]
-    return spark.createDataFrame(data, schema="metric string, value double")
+    return local_frame(spark, data, schema="metric string, value double")
 
 
 def ts_analyzer(
@@ -316,7 +316,8 @@ def seasonal_decompose(
         )
         for i in range(n)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         schema="idx int, grain_key string, observed double, trend double, "
         "seasonal double, resid double",

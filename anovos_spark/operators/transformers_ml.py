@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anovos_spark.core.typing import resolve_columns
+from anovos_spark.core.utils import local_frame
 
 
 # --------------------------------------------------------------------------- #
@@ -510,7 +511,8 @@ def auto_imputation(
         scores = {name: fut.result() for name, fut in futures.items()}
     winner = min(scores, key=scores.get)
     spark = idf.sparkSession
-    scores_df = spark.createDataFrame(
+    scores_df = local_frame(
+        spark,
         sorted(scores.items()), schema="method string, score double"
     )
     clean.unpersist()

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from anovos_spark.core.typing import resolve_columns
+from anovos_spark.core.utils import local_frame
 
 
 def _correlation_matrix_np(idf: DataFrame, cols: list[str]) -> np.ndarray:
@@ -267,7 +268,8 @@ def variable_clustering(
             )
 
     spark = idf.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         schema="cluster int, attribute string, RS_own double, RS_NC double, RS_ratio double",
     )

@@ -39,6 +39,7 @@ try:
 except ImportError:  # pragma: no cover
     yaml = None
 
+from anovos_spark.core.utils import local_frame
 from anovos_spark.plans.stats_store import StatsStore
 
 STATS_FNS = {
@@ -423,7 +424,8 @@ def run_pipeline(
                     from pyspark.sql import types as T
 
                     id_type = df.schema[kw.get("id_col", "doc_id")].dataType
-                    pairs = spark.createDataFrame(
+                    pairs = local_frame(
+                        spark,
                         [],
                         T.StructType([
                             T.StructField("new_id", id_type),

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from anovos_spark.core.utils import local_frame
+
 
 def frequency_frame(idf: DataFrame, col: str) -> DataFrame:
     """[<col>, count, count_pct] per value, like plot_frequency's frame
@@ -110,7 +112,8 @@ def outlier_frame(
         )
     orow = idf.agg(*out_aggs).collect()[0] if out_aggs else {}
     spark = idf.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 c,
@@ -190,8 +193,8 @@ def violin_frame(
     cols = resolve_columns(idf, ensure_list(list_of_cols), (), restrict_to="numerical")
     if not cols:
         spark = idf.sparkSession
-        return spark.createDataFrame(
-            [], "attribute string, bin int, bin_lo double, bin_hi double, density double"
+        return local_frame(
+            spark, [], "attribute string, bin int, bin_lo double, bin_hi double, density double"
         )
     if sample_size is not None:
         total = idf.count()
@@ -215,8 +218,8 @@ def violin_frame(
     }
     if not spans:
         spark = idf.sparkSession
-        return spark.createDataFrame(
-            [], "attribute string, bin int, bin_lo double, bin_hi double, density double"
+        return local_frame(
+            spark, [], "attribute string, bin int, bin_lo double, bin_hi double, density double"
         )
     # melt only the usable columns; bin in the same expression (min/max
     # are literals by now, so the whole pass is one narrow scan + one

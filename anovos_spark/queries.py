@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from anovos_spark.core.utils import local_frame
 from anovos_spark.operators import stats
 
 
@@ -365,7 +366,7 @@ def q_label_encoding(spark, sf_dir):
     rows = [
         (c, v, i) for c, m in model.items() for v, i in m.items()
     ]
-    return spark.createDataFrame(rows, schema="attribute string, value string, index int")
+    return local_frame(spark, rows, schema="attribute string, value string, index int")
 
 
 def q_target_encoding(spark, sf_dir):
@@ -374,7 +375,7 @@ def q_target_encoding(spark, sf_dir):
     od = table(spark, sf_dir, "orders")
     model = target_encoding_fit(od, ["o_orderpriority"], "o_orderstatus", "F")
     rows = [(c, v, r) for c, m in model.items() for v, r in m.items()]
-    return spark.createDataFrame(rows, schema="attribute string, value string, rate double")
+    return local_frame(spark, rows, schema="attribute string, value string, rate double")
 
 
 def q_z_standardization(spark, sf_dir):
@@ -814,7 +815,8 @@ def q_ivf_topk(spark, sf_dir):
         .collect()[0]
     )
     total, hits = row["total"], row["hits"]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(total, int(hits / max(total, 1) >= 0.5))],
         schema="total long, recall_ok int",
     )
@@ -1217,7 +1219,8 @@ def q_autoencoder_latent(spark, sf_dir):
         epochs=15,
         seed=42,
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(model["k"], odf.count(), int(model["train_mse"] < 1.0))],
         schema="k int, n_rows long, converged int",
     )
@@ -1265,7 +1268,8 @@ def q_autoencoder_optimality(spark, sf_dir):
     r, n_complete = float(row["r"]), int(row["n"])
     floor = (1.0 - r) / 2.0
     tol_low = 1e-9 if n_complete <= sample_size else 2.0 / _math.sqrt(sample_size)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(round(r, 6), int(mse >= floor - tol_low), int(mse <= floor + 0.02))],
         schema="abs_corr double, above_floor int, near_optimum int",
     )
@@ -1282,7 +1286,7 @@ def q_ts_format_vote(spark, sf_dir):
     )
     votes = ts_format_vote(od)
     rows = sorted(votes.items())
-    return spark.createDataFrame(rows, schema="attribute string, fmt string")
+    return local_frame(spark, rows, schema="attribute string, fmt string")
 
 
 def q_dateformat_conversion(spark, sf_dir):
@@ -1352,7 +1356,8 @@ def q_pca_latent(spark, sf_dir):
     explained_ok = int(
         k == len(cols) or sum(variances) / len(cols) >= 0.95 - 1e-6
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(1 <= k <= len(cols)), var_monotonic, orthogonal_ok,
           explained_ok, int(row["n"]))],
         schema="k_in_range int, var_monotonic int, orthogonal_ok int, "
@@ -1545,7 +1550,7 @@ def q_monotonic_binning(spark, sf_dir):
         exact=_exact(),
     )
     rows = sorted((c, m["bin_size"]) for c, m in model.items())
-    return spark.createDataFrame(rows, schema="attribute string, n_bins int")
+    return local_frame(spark, rows, schema="attribute string, n_bins int")
 
 
 def q_boxcox(spark, sf_dir):
@@ -1563,7 +1568,7 @@ def q_boxcox(spark, sf_dir):
         li, ["l_extendedprice", "l_quantity"], sample_size=10_000_000
     )
     rows = sorted((c, float(l)) for c, l in lambdas.items())
-    return spark.createDataFrame(rows, schema="attribute string, lambda double")
+    return local_frame(spark, rows, schema="attribute string, lambda double")
 
 
 def q_auto_imputation(spark, sf_dir):
@@ -1624,7 +1629,8 @@ def q_null_columns(spark, sf_dir):
     odf, stats_df = null_columns_detection(
         li, cols, treatment=True, treatment_method="row_removal"
     )
-    after = spark.createDataFrame(
+    after = local_frame(
+        spark,
         [("__rows_after__", odf.count(), None)],
         schema="attribute string, missing_count long, missing_pct double",
     )
@@ -1718,7 +1724,8 @@ def q_data_sample(spark, sf_dir):
         li, strata_cols=["l_returnflag"], fraction=0.1, method_type="stratified",
         seed=12, strata_counts=counts,
     )
-    overall = spark.createDataFrame(
+    overall = local_frame(
+        spark,
         [("overall:random",
           float(abs(s.count() / total - 0.1) <= _band(total))),
          ("overall:stratified",
@@ -2134,7 +2141,7 @@ def q_feature_recommender(spark, sf_dir):
     cols = []
     for t in ("lineitem", "orders", "customer"):
         cols += table(spark, sf_dir, t).columns
-    attrs = spark.createDataFrame([(c,) for c in sorted(set(cols))], "attribute string")
+    attrs = local_frame(spark, [(c,) for c in sorted(set(cols))], "attribute string")
     return feature_recommender_match(attrs, top_k=1).withColumn(
         "method", F.lit("tfidf")
     )
@@ -2155,7 +2162,7 @@ def q_feature_recommender_embedded(spark, sf_dir):
     cols = []
     for t in ("lineitem", "orders", "customer"):
         cols += table(spark, sf_dir, t).columns
-    attrs = spark.createDataFrame([(c,) for c in sorted(set(cols))], "attribute string")
+    attrs = local_frame(spark, [(c,) for c in sorted(set(cols))], "attribute string")
     m = feature_recommender_match_embedded(attrs, top_k=1, min_score=-1.0)
     return m.groupBy("attribute").agg(
         F.count(F.lit(1)).alias("n_matches"),
@@ -2182,7 +2189,7 @@ def q_feature_recommender_distributional(spark, sf_dir):
     cols = []
     for t in ("lineitem", "orders", "customer"):
         cols += table(spark, sf_dir, t).columns
-    attrs = spark.createDataFrame([(c,) for c in sorted(set(cols))], "attribute string")
+    attrs = local_frame(spark, [(c,) for c in sorted(set(cols))], "attribute string")
     return feature_recommender_match_distributional(
         attrs, top_k=1, min_score=0.05
     ).withColumn("method", F.lit("distributional"))
@@ -2208,11 +2215,7 @@ def q_feature_recommender_gemm(spark, sf_dir):
     from anovos_spark.operators.featrec import feature_recommender_match_embedded
 
     emb = table(spark, sf_dir, "embeddings")
-    # repartition after the cap: orderBy().limit() plans TakeOrdered whose
-    # result is a SINGLE partition, which would serialize the downstream
-    # Arrow GEMM onto one worker (measured 2.0 -> 5.3 s at sf1); the row
-    # SET is already deterministic, so spreading it is free semantically
-    attrs = emb.where(F.col("vec_id") % 5 == 0).orderBy("vec_id").limit(5000).repartition(32).select(
+    attrs = emb.where(F.col("vec_id") % 5 == 0).orderBy("vec_id").limit(5000).select(
         F.concat(F.lit("attr_"), F.col("vec_id").cast("string")).alias("attribute"),
         F.col("embedding").cast("array<double>").alias("emb"),
     )
@@ -3494,9 +3497,7 @@ def q_feature_stability_estimation(spark, sf_dir):
             (i, "x", float(r["qm"]), float(r["qs"])),
             (i, "y", float(r["dm"]), float(r["ds"])),
         ]
-    stats = spark.createDataFrame(
-        parts, "idx int, attribute string, mean double, stddev double"
-    )
+    stats = local_frame(spark, parts, "idx int, attribute string, mean double, stddev double")
     out = feature_stability_estimation(stats, "x*x + y")
     return out.select(
         "attribute",
@@ -3695,7 +3696,7 @@ def q_geo_auto_detect(spark, sf_dir):
     )
     det = geo_auto_detection(df)
     rows = [(kind, c) for kind in ("lat", "lon", "geohash") for c in det[kind]]
-    return spark.createDataFrame(rows, "kind string, col_name string")
+    return local_frame(spark, rows, "kind string, col_name string")
 
 
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

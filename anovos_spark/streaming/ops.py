@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from anovos_spark.core.utils import local_frame
+
 
 @contextmanager
 def streaming_shuffle_partitions(spark: SparkSession, n: int = 8):
@@ -484,7 +486,7 @@ def incremental_stats_sink(
                     None,
                 )
             )
-        new = spark.createDataFrame(parts, schema)
+        new = local_frame(spark, parts, schema)
         new.coalesce(1).write.mode("overwrite").parquet(
             f"{run_dir}/batch_id={int(batch_id)}"
         )
@@ -621,7 +623,8 @@ def streaming_dedup_sink(
             # don't leave a long-typed empty file that breaks later schema
             # merges across sibling batch_id dirs
             id_type = batch_df.schema[id_col].dataType
-            pairs = spark.createDataFrame(
+            pairs = local_frame(
+                spark,
                 [],
                 T.StructType([
                     T.StructField("new_id", id_type),

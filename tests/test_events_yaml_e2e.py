@@ -130,3 +130,15 @@ def test_yaml_constraints_report(events_result, oracle_con):
     assert rep[0]["passed"] == int(nulls == 0)
     assert rep[1]["passed"] == int(dups == 0)
     assert rep[2]["passed"] == int(outside == 0)
+
+
+def test_yaml_frames_are_jvm_local(events_result):
+    """No stats frame of the events run replays Python rows through a
+    Python worker: the constraints report and the funnel's step frame are
+    LocalRelations (the funnel joins its step frame to the counts)."""
+    from tests.plan_guard import python_row_leaves
+
+    frames = events_result.stats._cache
+    assert {("main", "funnel"), ("main", "constraints")} <= set(frames)
+    for key, df in frames.items():
+        assert not python_row_leaves(df), key

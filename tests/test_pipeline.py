@@ -7,6 +7,7 @@ from anovos_spark.plans.feature_export import add_timestamp_columns, export_feat
 from anovos_spark.plans.pipeline import run_pipeline
 from anovos_spark.plans.report import basic_report
 from anovos_spark.plans.stats_store import StatsStore
+from tests.plan_guard import python_row_leaves
 
 
 def test_pipeline_end_to_end(spark, sf_dir, tmp_path):
@@ -625,6 +626,39 @@ def test_pipeline_events_stages(spark, sf_dir):
     with _p.raises(ValueError, match="unknown events_pipeline stage"):
         run_pipeline(spark, cfg)
 
+
+
+def test_pipeline_frames_are_jvm_local(spark, sf_dir):
+    """Every stats frame and quality report a profile run registers is
+    planned without Python-worker input: the report frames the engine
+    builds from collected statistics are LocalRelations."""
+    num = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+    cfg = {
+        "input_dataset": {
+            "read": {"file_path": f"{sf_dir}/lineitem.parquet", "file_type": "parquet"},
+            "select_columns": ["l_orderkey", *num, "l_returnflag"],
+        },
+        "quality_checker": {
+            "outlier_detection": {
+                "list_of_cols": num, "treatment": True,
+                "treatment_method": "value_replacement",
+            },
+        },
+        "stats_generator": {"metrics": ["measures_of_counts"]},
+        "association_evaluator": {"correlation_matrix": {"list_of_cols": num}},
+        "variable_clustering": {"list_of_cols": num},
+        "report_frames": {"frequency": {"col": "l_returnflag"}},
+    }
+    res = run_pipeline(spark, cfg)
+    frames = {f"stats.{name}": df for (_, name), df in res.stats._cache.items()}
+    frames.update({f"quality.{n}": df for n, df in res.quality_reports.items()})
+    assert {"stats.correlation_matrix", "stats.variable_clustering",
+            "quality.outlier_detection"} <= set(frames)
+    for name, df in frames.items():
+        assert not python_row_leaves(df), name
+    for name in ("stats.correlation_matrix", "quality.outlier_detection"):
+        plan = frames[name]._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation"), (name, plan)
 
 def test_text_pipeline_example_yaml(spark, tmp_path):
     """The checked-in examples/text_pipeline.yaml runs end to end — every

@@ -569,6 +569,44 @@ def test_feature_recommender_embedded_paths(spark):
     assert sorted(map(tuple, e1.collect())) == sorted(map(tuple, e2.collect()))
 
 
+def test_feature_recommender_embedded_partition_invariant(spark):
+    """The operator sizes its own Arrow stage: a single-partition attribute
+    input (an orderBy().limit() cap) and a 32-partition one give the same
+    ranked rows."""
+    import numpy as np
+
+    from anovos_spark.core.utils import local_frame
+    from anovos_spark.operators.featrec import feature_recommender_match_embedded
+
+    rng = np.random.default_rng(7)
+    attrs = local_frame(
+        spark,
+        [(f"attr_{i}", rng.normal(size=8).tolist()) for i in range(100)],
+        "attribute string, emb array<double>",
+    )
+    corpus = local_frame(
+        spark,
+        [(f"feat_{i}", "synthetic", "ann", rng.normal(size=8).tolist()) for i in range(40)],
+        "feature_name string, industry string, usecase string, emb array<double>",
+    )
+
+    def ranked(a):
+        out = feature_recommender_match_embedded(
+            a, corpus, attr_emb_col="emb", corpus_emb_col="emb", top_k=2, min_score=0.05
+        )
+        return sorted(map(tuple, out.collect()))
+
+    one = ranked(attrs.coalesce(1))
+    assert one and one == ranked(attrs.repartition(32))
+    # hashed-token provider over the bundled corpus
+    names = local_frame(spark, [(n,) for n in ("cust_income", "acct_balance")], "attribute string")
+    hashed = [
+        sorted(map(tuple, feature_recommender_match_embedded(a, top_k=2).collect()))
+        for a in (names.coalesce(1), names.repartition(32))
+    ]
+    assert hashed[0] and hashed[0] == hashed[1]
+
+
 def test_vocabulary(spark):
     from anovos_spark.operators.text import vocabulary
 
