@@ -153,10 +153,7 @@ def feature_recommender_match(
         for fname, ind, use, toks in row_toks
         for t in toks
     ]
-    idf = local_frame(
-        spark,
-        sorted(idf_map.items()), schema="token string, idf double"
-    )
+    idf = local_frame(spark, sorted(idf_map.items()), "token string, idf double")
     corpus_weighted = local_frame(
         spark,
         corpus_weighted_rows,
@@ -419,10 +416,7 @@ def feature_recommender_match_distributional(
     tok_vec_rows += [
         (t, c2, idf_map[t] * v / math.sqrt(pn2[t])) for (t, c2), v in pp.items()
     ]
-    tok_vec = local_frame(
-        spark,
-        tok_vec_rows, schema="t string, c string, v double"
-    )
+    tok_vec = local_frame(spark, tok_vec_rows, "t string, c string, v double")
     # corpus document vectors + norms (wt = 1 per token row, multiplicity
     # from duplicate-keyed rows preserved)
     vmap: dict = {}
@@ -437,8 +431,7 @@ def feature_recommender_match_distributional(
         cn = math.sqrt(sum(x * x for x in dv.values()))
         cvec_rows += [(fname, c2, x, cn) for c2, x in dv.items()]
     cvec = local_frame(
-        spark,
-        cvec_rows, schema="feature_name string, c string, dv double, cn double"
+        spark, cvec_rows, "feature_name string, c string, dv double, cn double"
     )
 
     # ---- ATTRIBUTE document vectors: fully distributed ------------------

@@ -511,10 +511,7 @@ def auto_imputation(
         scores = {name: fut.result() for name, fut in futures.items()}
     winner = min(scores, key=scores.get)
     spark = idf.sparkSession
-    scores_df = local_frame(
-        spark,
-        sorted(scores.items()), schema="method string, score double"
-    )
+    scores_df = local_frame(spark, sorted(scores.items()), "method string, score double")
     clean.unpersist()
     corrupted.unpersist()
     return winner, scores_df
