@@ -25,6 +25,16 @@ DEFAULT_CONF = {
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
     "spark.executorEnv.MKL_NUM_THREADS": "1",
+    # Janino-compiled classes are cached by generated source.  Spark's
+    # default of 100 entries (a Guava LRU in 4 segments of 25, so it
+    # evicts before it is full) is smaller than one pass of a profile:
+    # ~177 classes per perfbench profile_ml pass, ~97 per text_events
+    # pass, so every re-run of the same config recompiled them.  Static
+    # conf, read once per JVM when code is first generated: it takes
+    # effect only when get_session creates the SparkContext; an
+    # already-running session keeps its own value (applyModifiableSettings
+    # only warns).
+    "spark.sql.codegen.cache.maxEntries": "1024",
 }
 
 

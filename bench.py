@@ -101,6 +101,9 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    from anovos_spark.core.session import DEFAULT_CONF
+
+    codegen_cache = "spark.sql.codegen.cache.maxEntries"
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("anovos_spark-bench")
@@ -121,6 +124,9 @@ def main():
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        # engine session default: the generated-class cache size (static,
+        # so it must be set here, when the SparkContext is created)
+        .config(codegen_cache, DEFAULT_CONF[codegen_cache])
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")

@@ -6,6 +6,12 @@ from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from anovos_spark.core.session import DEFAULT_CONF  # noqa: E402
+
+# static: it sizes the JVM's generated-class cache once, when this session
+# creates the SparkContext
+CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -17,6 +23,7 @@ def spark():
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        .config(CODEGEN_CACHE, DEFAULT_CONF[CODEGEN_CACHE])
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_TEST_MEM", "4g"))
         .getOrCreate()
     )
