@@ -25,7 +25,8 @@ from collections import Counter
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from anovos_spark.core.utils import fan_out, local_frame
+from anovos_spark.core.gemm import block_cosine, top_k_by
+from anovos_spark.core.utils import local_frame
 
 # (feature_name, industry, usecase, description) — original content
 DEFAULT_CORPUS: list[tuple[str, str, str, str]] = [
@@ -193,10 +194,7 @@ def feature_recommender_match(
         )
         .where(F.col("score") >= min_score)
     )
-    w = Window.partitionBy("attribute").orderBy(
-        F.col("score").desc(), F.col("feature_name").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= top_k)
+    return top_k_by(scored, "attribute", "score", "feature_name", top_k)
 
 
 # Generic data-column vocabulary lexicon: common abbreviations and
@@ -550,12 +548,7 @@ def feature_recommender_match_distributional(
         .where(F.col("attribute").isNotNull() & (F.col("score") >= min_score))
         .select("attribute", "feature_name", "industry", "usecase", "score")
     )
-    w = Window.partitionBy("attribute").orderBy(
-        F.col("score").desc(), F.col("feature_name").asc()
-    )
-    return blended.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= top_k
-    )
+    return top_k_by(blended, "attribute", "score", "feature_name", top_k)
 
 
 def hashed_token_embedding(
@@ -668,14 +661,12 @@ def feature_recommender_match_embedded(
        documented divergence from the reference's all-mpnet-base-v2
        rankings, featrec_init.py:29-31).
 
-    Scoring: the corpus matrix (small by contract, ≤10k rows) collects
-    and broadcasts; attribute vectors GEMM against it per Arrow batch
-    (mapInPandas), so attributes never shuffle and scale to millions —
-    only (attribute, feature, score≥min_score) survivors reach the
-    rank window."""
+    Scoring: the corpus (≤10k features) is the broadcast side of the
+    block-cosine GEMM kernel (core.gemm.block_cosine) and attribute
+    vectors stream through it, so attributes never shuffle and scale to
+    millions — only (attribute, feature, score≥min_score) survivors reach
+    the rank window."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
 
     spark = attr_df.sparkSession
     if corpus_df is None:
@@ -709,65 +700,19 @@ def feature_recommender_match_embedded(
             dim=dim,
         )
 
-    c_rows = corpus_emb.collect()
-    if len(c_rows) > 10_000:
-        raise ValueError(
-            "embedded recommender broadcasts the corpus; keep it <= 10k "
-            "features (shard the corpus or use lsh_bucket_topk)"
-        )
-    if not c_rows:
-        raise ValueError(
-            "embedded recommender needs a non-empty feature corpus "
-            "(corpus embedding collected empty)"
-        )
-    meta = [(r["feature_name"], r["industry"], r["usecase"]) for r in c_rows]
-    C = np.array([r["embedding"] for r in c_rows], dtype="float64")
-    Cn = np.sqrt((C * C).sum(axis=1))
-    Cn[Cn == 0] = np.inf
-    Cz = C / Cn[:, None]
-    b_c = spark.sparkContext.broadcast((meta, Cz))
     thr = float(min_score)
-
-    def score_blocks(batches):
-        meta_b, Cz_b = b_c.value
-        names = np.array([m[0] for m in meta_b])
-        inds = np.array([m[1] for m in meta_b])
-        uses = np.array([m[2] for m in meta_b])
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            A = np.array(list(pdf["embedding"]), dtype="float64")
-            An = np.sqrt((A * A).sum(axis=1))
-            An[An == 0] = np.inf
-            S = np.round((A / An[:, None]) @ Cz_b.T, 6)  # (rows, n_features)
-            ai, ci = np.nonzero(S >= thr)
-            attrs = pdf["attribute"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "attribute": attrs[ai],
-                    "feature_name": names[ci],
-                    "industry": inds[ci],
-                    "usecase": uses[ci],
-                    "score": S[ai, ci],
-                }
-            )
-
-    # fan_out sizes the Arrow stage from the input's size and the core
-    # count: a single-partition attribute frame (e.g. an orderBy().limit()
-    # cap, planned as TakeOrdered) would otherwise run the GEMM on one
-    # worker, and a caller-chosen partition count on a 100-row input would
-    # run several waves of Python-worker tasks
-    scored = fan_out(attr_emb).mapInPandas(
-        score_blocks,
-        schema="attribute string, feature_name string, industry string, "
-        "usecase string, score double",
+    scored = block_cosine(
+        attr_emb,
+        corpus_emb,
+        lambda S, *_: np.nonzero(S >= thr),
+        score_col="score",
+        cap=10_000,
+        over_cap="embedded recommender broadcasts the corpus; keep it <= 10k "
+        "features (shard the corpus or use lsh_bucket_topk)",
+        empty="embedded recommender needs a non-empty feature corpus "
+        "(corpus embedding collected empty)",
     )
-    w = Window.partitionBy("attribute").orderBy(
-        F.col("score").desc(), F.col("feature_name").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= top_k
-    )
+    return top_k_by(scored, "attribute", "score", "feature_name", top_k)
 
 
 def list_all_industry(spark, corpus=None) -> DataFrame:

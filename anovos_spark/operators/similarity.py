@@ -1,24 +1,32 @@
 """Similarity search over embedding columns (array<float>).
 
-Two paths, same contract:
-- brute_force_topk: exact cosine top-k via join + window — the baseline and
-  the oracle-checkable truth.  O(Q·N) dot products; at 100 TB use it only
-  for small Q against a broadcast query set (which is exactly how it's
-  written: the query side is broadcast, the corpus side never shuffles).
-- lsh_topk: random-hyperplane LSH — sign-bit sketch → bucket join → exact
-  re-rank inside buckets.  Recall < 1, shuffle O(N·tables); the scale path.
+Every search returns [query_id, neighbor_id, cos_sim, rank] (near-dup:
+[id_a, id_b, cos_sim]), with cos_sim rounded to 6 decimals and ranks
+ordered by (cos_sim DESC, neighbor_id ASC):
 
-Dot products run as F.aggregate/F.zip_with over the array — JVM-side over
-primitive arrays, no Python.  (Measured at dim 64: the HOF aggregate beats
-a fully-unrolled getItem chain ~3× — element_at re-checks bounds/null per
-term, and the 64-deep Add tree defeats codegen fusion; don't "optimize"
-this into flat arithmetic.)  Floats are cast to double before multiply so
-the sequential fold is deterministic and matches the DuckDB oracle
-bit-for-bit.  Norms are computed once per row, never per pair; pair-dedup
-happens AFTER scoring so distincts shuffle narrow (id, id, sim) rows, not
-embedding vectors; and the exact O(N²) path repartitions its streamed side
-so the nested-loop join uses every core instead of the scan's single
-parquet partition.
+- brute_force_topk: exact top-k — the oracle-checkable truth.  The query
+  set (≤10k) is the broadcast side of the block-cosine GEMM kernel
+  (core.gemm.block_cosine), the corpus streams through it, and a rank
+  window picks each query's top k from per-chunk partial top-k rows.
+- embedding_near_dup_pairs: exact all-pairs on the same kernel (threshold
+  cut, id_a < id_b) at low thresholds; random-hyperplane LSH sign
+  sketches → bucket join → exact re-score at high ones.
+- lsh_bucket_topk: numpy sign sketches per Arrow batch → (table, bucket)
+  equi-join → exact re-score of the candidates; recall < 1, shuffle
+  O(N·tables).
+- ivf_topk / ivf_build_index / ivf_query_index: KMeans cells, each query
+  re-scores only its n_probe nearest cells; recall < 1.
+- quantize_embeddings / dequantize_embeddings: per-vector int8 scaling.
+
+Candidate re-scoring after the LSH and IVF joins, and the LSH near-dup
+sketches, are JVM-side F.aggregate/F.zip_with folds over the arrays — no
+Python.  (Measured at dim 64: the HOF aggregate beats a fully-unrolled
+getItem chain ~3× — element_at re-checks bounds/null per term, and the
+64-deep Add tree defeats codegen fusion.)  Floats are cast to double
+before multiply so the sequential fold is deterministic and matches the
+DuckDB oracle bit-for-bit.  Norms are computed once per row, never per
+pair, and pairs are scored BEFORE any distinct so the shuffle carries
+narrow (id, id, sim) rows, not embedding vectors.
 """
 
 from __future__ import annotations
@@ -26,7 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from anovos_spark.core.utils import local_frame
+from anovos_spark.core.gemm import block_cosine, top_k_by
+from anovos_spark.core.utils import fan_out, local_frame
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -60,6 +69,11 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(_dot(a, b), _norm2(a) * _norm2(b))
 
 
+def _cos6(a: str, b: str, na: str, nb: str) -> Column:
+    """round(cos, 6) of array columns ``a``, ``b`` with precomputed norms."""
+    return F.round(F.try_divide(_dot(F.col(a), F.col(b)), F.col(na) * F.col(nb)), 6)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -73,99 +87,48 @@ def brute_force_topk(
     broken by neighbor id asc on the 6-decimal-rounded similarity (so
     ranking is reproducible across engines).
 
-    Scoring runs as one numpy GEMM per ~64 MB corpus chunk against the
-    collected-and-broadcast query block (queries are small by contract) —
-    per-pair HOF folds stay out of the hot path (interpreted eval, no
-    codegen, megamorphic drift in aged sessions).  The corpus never
-    shuffles, and each chunk emits only its PARTIAL TOP-K per query
-    (stable-sorted under the global (cos DESC, id ASC) order, so the
-    cross-chunk rank window sees a superset of the true top-k): the
-    shuffle is O(k·queries·chunks), never O(corpus·queries) — at the
-    documented caps (200k corpus × 10k queries) the unreduced pair
-    stream would be 2e9 rows (r10 mem-probe finding)."""
+    The query side (≤10k by contract) is the broadcast side of
+    ``core.gemm.block_cosine``; the corpus streams and never shuffles.
+    Each score chunk emits only its PARTIAL TOP-K per query under the
+    global (cos DESC, id ASC) order — every global top-k neighbor is among
+    its query's k best within its own chunk — so the rank window shuffles
+    O(k·queries·chunks) rows, never O(corpus·queries): at the caps
+    (200k corpus × 10k queries) the unreduced pair stream would be 2e9
+    rows (r10 mem-probe finding)."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-
-    from anovos_spark.core.utils import fan_out
-
-    # null vectors carry no geometry — excluded on both sides
-    corpus = corpus.where(F.col(vec_col).isNotNull())
-    queries = queries.where(F.col(vec_col).isNotNull())
-    q_rows = queries.select(id_col, vec_col).collect()
-    if len(q_rows) > 10_000:
-        raise ValueError(
-            "brute-force top-k broadcasts the query side; keep it <= 10k "
-            "vectors (use lsh_bucket_topk / ivf_topk for large query sets)"
-        )
-    if not q_rows:
-        raise ValueError(
-            "brute-force top-k needs at least one non-null query vector "
-            "(query side collected empty)"
-        )
-    qids = np.array([r[0] for r in q_rows])
-    Q = np.array([r[1] for r in q_rows], dtype="float64")
-    Qn = np.sqrt((Q * Q).sum(axis=1))
-    Qn[Qn == 0] = np.inf
-    Qz = Q / Qn[:, None]
-    sc = corpus.sparkSession.sparkContext
-    b_q = sc.broadcast((qids, Qz))
-    id_dtype = dict(corpus.dtypes)[id_col]
 
     kk = int(k)
 
-    def score_blocks(batches):
-        qids_b, Qz_b = b_q.value
-        nq = len(qids_b)
-        # chunk the corpus rows so the score block S stays ~64 MB
-        # regardless of query count (10k queries × an unchunked 10k-row
-        # Arrow batch was an 800 MB matrix per python worker — the same
-        # class as the sf10 near-dup GEMM OOM, r9)
-        chunk = max(1, 8_000_000 // max(nq, 1))
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # id-ascending within the chunk + a STABLE sort below makes
-            # the per-chunk selection order exactly the global ranking
-            # order (cos_sim DESC, neighbor_id ASC)
-            pdf = pdf.sort_values(id_col, kind="stable")
-            C_all = np.array(list(pdf[vec_col]), dtype="float64")
-            cid_all = pdf[id_col].to_numpy()
-            for lo in range(0, len(pdf), chunk):
-                C = C_all[lo:lo + chunk]
-                cid = cid_all[lo:lo + chunk]
-                Cn = np.sqrt((C * C).sum(axis=1))
-                Cn[Cn == 0] = np.inf
-                S = np.round((C / Cn[:, None]) @ Qz_b.T, 6)  # (rows, nq)
-                S[cid[:, None] == qids_b[None, :]] = -np.inf  # self-matches
-                # per-chunk partial top-k: every GLOBAL top-k neighbor of
-                # a query is among that query's k best within its chunk
-                # under the same total order, so emitting k rows per
-                # (query, chunk) — instead of all rows×nq pairs — loses
-                # nothing and keeps the shuffle O(k·nq·chunks), not O(N·nq)
-                take = min(kk, S.shape[0])
-                top = np.argsort(-S, axis=0, kind="stable")[:take]  # (take, nq)
-                qi = np.broadcast_to(np.arange(nq), (take, nq))
-                sel = S[top, qi]
-                keep = np.isfinite(sel)
-                yield pd.DataFrame(
-                    {
-                        "query_id": qids_b[qi[keep]],
-                        "neighbor_id": cid[top[keep]],
-                        "cos_sim": sel[keep],
-                    }
-                )
+    def partial_top_k(S, nid, qid):
+        S[nid[:, None] == qid[None, :]] = -np.inf  # self-matches
+        # id-ascending rows + a STABLE sort on the score make the
+        # selection order exactly the global ranking order
+        by_id = np.argsort(nid, kind="stable")
+        top = by_id[np.argsort(-S[by_id], axis=0, kind="stable")[:kk]]
+        qi = np.broadcast_to(np.arange(S.shape[1]), top.shape)
+        keep = np.isfinite(S[top, qi])
+        return top[keep], qi[keep]
 
-    scored = fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-        score_blocks,
-        schema=f"query_id {id_dtype}, neighbor_id {id_dtype}, cos_sim double",
+    # null vectors carry no geometry — excluded on both sides
+    scored = block_cosine(
+        corpus.where(F.col(vec_col).isNotNull()).select(
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("embedding")
+        ),
+        queries.where(F.col(vec_col).isNotNull()).select(
+            F.col(id_col).cast(dict(corpus.dtypes)[id_col]).alias("query_id"),
+            F.col(vec_col).alias("embedding"),
+        ),
+        partial_top_k,
+        score_col="cos_sim",
+        cap=10_000,
+        over_cap="brute-force top-k broadcasts the query side; keep it <= 10k "
+        "vectors (use lsh_bucket_topk / ivf_topk for large query sets)",
+        empty="brute-force top-k needs at least one non-null query vector "
+        "(query side collected empty)",
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return top_k_by(
+        scored.select("query_id", "neighbor_id", "cos_sim"),
+        "query_id", "cos_sim", "neighbor_id", k,
     )
 
 
@@ -201,168 +164,92 @@ def embedding_near_dup_pairs(
       join (and a higher threshold if the corpus allows it).
 
     exact=True/False forces a path explicitly."""
-    from pyspark.sql import functions as F
-
     if exact == "auto":
         exact = threshold < 0.7
 
     # null vectors carry no geometry — excluded before either path
     corpus = corpus.where(F.col(vec_col).isNotNull())
-    c1 = corpus.select(
+    if exact:
+        # The O(N²) baseline as a block GEMM (core.gemm.block_cosine), not
+        # a nested-loop join of per-pair expressions: higher-order-function
+        # folds don't join whole-stage codegen (interpreted eval goes
+        # megamorphic in long sessions — measured 12s→29s drift for the
+        # same plan), while the GEMM scores a 2k×2k corpus in
+        # milliseconds.  The corpus is also the broadcast side (guarded —
+        # this path is small-N by contract), and only surviving pairs
+        # leave a chunk, so nothing quadratic is ever shuffled.
+        import numpy as np
+
+        return block_cosine(
+            corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("embedding")),
+            corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("embedding")),
+            lambda S, a, b: np.nonzero((S >= threshold) & (a[:, None] < b[None, :])),
+            score_col="cos_sim",
+            cap=200_000,
+            over_cap="exact near-dup is quadratic and quarantined to <=200k vectors "
+            "(got {n}); use exact=False (threshold >= 0.7) or raise the "
+            "threshold so LSH can prune",
+            empty="embedding_near_dup_pairs: corpus is empty (nothing to index)",
+        )
+    # sketching is compute-heavy per row (bits×tables literal-array dots):
+    # fan the scan out so it doesn't run single-task when the corpus
+    # arrives as one parquet row group
+    c1 = fan_out(corpus.select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
         _norm2(F.col(vec_col)).alias("na"),
-    )
-    c2 = corpus.select(
+    ))
+    c2 = fan_out(corpus.select(
         F.col(id_col).alias("id_b"),
         F.col(vec_col).alias("vb"),
         _norm2(F.col(vec_col)).alias("nb"),
-    )
+    ))
+    first_vec = corpus.select(vec_col).first()
+    if first_vec is None or first_vec[0] is None:
+        raise ValueError("embedding_near_dup_pairs: corpus is empty (nothing to index)")
+    dim = len(first_vec[0])
+    planes = {
+        (t, b): _hyperplane(dim, seed, t, b)
+        for t in range(n_tables)
+        for b in range(n_bits)
+    }
 
-    def score() -> Column:
-        return F.round(
-            F.try_divide(
-                _dot(F.col("va"), F.col("vb")), F.col("na") * F.col("nb")
-            ),
-            6,
+    def sketch(df, id_alias, v_alias, n_alias):
+        rows = []
+        for t in range(n_tables):
+            bits = None
+            for b in range(n_bits):
+                bit = (_dot_const(F.col(v_alias), planes[(t, b)]) > 0).cast("int")
+                bits = bit if bits is None else bits * 2 + bit
+            rows.append(F.struct(F.lit(t).alias("t"), bits.alias("bk")))
+        return df.select(
+            id_alias, v_alias, n_alias, F.explode(F.array(*rows)).alias("tb")
+        ).select(id_alias, v_alias, n_alias, "tb.t", "tb.bk")
+
+    sa = sketch(c1, "id_a", "va", "na")
+    sb = sketch(c2, "id_b", "vb", "nb")
+    # skew guard (same contract as dedup's banded joins): a sketch bucket
+    # over bucket_cap members — N identical embeddings land in one (table,
+    # bucket) key — would emit N²/2 pairs from one join task; such buckets
+    # emit a min-id spanning STAR instead (connectivity-equivalent for
+    # near-dup grouping).  Only sa needs the filter: sb rows in oversized
+    # buckets then find no partner.
+    chain_scored = None
+    if bucket_cap is not None:
+        from anovos_spark.operators.dedup import _cap_buckets, _chain_pairs
+
+        sa, over = _cap_buckets(sa, ["t", "bk"], bucket_cap)
+        chain = _chain_pairs(over, ["t", "bk"], "id_a", payload=["va", "na"])
+        chain_scored = chain.select(
+            "id_a", "id_b", _cos6("va_a", "va_b", "na_a", "na_b").alias("cos_sim")
         )
-
-    if exact:
-        # The O(N²) baseline as a BLOCK MATMUL, not a nested-loop join of
-        # per-pair expressions: higher-order-function folds don't join
-        # whole-stage codegen (interpreted eval goes megamorphic in long
-        # sessions — measured 12s→29s drift for the same plan), while one
-        # numpy GEMM per Arrow batch scores a 2k×2k corpus in
-        # milliseconds.  The corpus rides to executors once as a
-        # broadcast (guarded — this path is small-N by contract); each
-        # batch computes S = Az·Bzᵀ and emits only surviving pairs, so
-        # nothing quadratic is ever shuffled.
-        import numpy as np
-        import pandas as pd
-
-        from anovos_spark.core.utils import fan_out
-
-        rows = corpus.select(id_col, vec_col).collect()
-        rows = [r for r in rows if r[1] is not None]
-        n = len(rows)
-        if n > 200_000:
-            raise ValueError(
-                f"exact near-dup is quadratic and quarantined to <=200k vectors "
-                f"(got {n}); use exact=False (threshold >= 0.7) or raise the "
-                "threshold so LSH can prune"
-            )
-        id_dtype = dict(corpus.dtypes)[id_col]
-        ids = np.array([r[0] for r in rows])
-        B = np.array([r[1] for r in rows], dtype="float64")
-        Bn = np.sqrt((B * B).sum(axis=1))
-        Bn[Bn == 0] = np.inf
-        Bz = B / Bn[:, None]
-        sc = corpus.sparkSession.sparkContext
-        b_corpus = sc.broadcast((ids, Bz))
-
-        # chunk the Arrow batch so the score block S stays ~64 MB no
-        # matter how large the broadcast corpus is: an UNchunked
-        # batch_rows × n matrix is 10k × 200k × 8 B = 16 GB per python
-        # worker — the sf10 differential OOM-killed workers at exactly
-        # the documented 200k quarantine cap before this fix
-        chunk = max(1, 8_000_000 // max(n, 1))
-
-        def score_blocks(batches):
-            ids_b, Bz_b = b_corpus.value
-            for pdf in batches:
-                A_all = np.array(list(pdf[vec_col]), dtype="float64")
-                if len(A_all) == 0:
-                    continue
-                aid_all = pdf[id_col].to_numpy()
-                for lo in range(0, len(A_all), chunk):
-                    A = A_all[lo:lo + chunk]
-                    An = np.sqrt((A * A).sum(axis=1))
-                    An[An == 0] = np.inf
-                    Az = A / An[:, None]
-                    S = Az @ Bz_b.T
-                    np.round(S, 6, out=S)
-                    aid = aid_all[lo:lo + chunk]
-                    keep = (S >= threshold) & (aid[:, None] < ids_b[None, :])
-                    ai, bi = np.nonzero(keep)
-                    yield pd.DataFrame(
-                        {
-                            "id_a": aid[ai],
-                            "id_b": ids_b[bi],
-                            "cos_sim": S[ai, bi],
-                        }
-                    )
-
-        return fan_out(corpus.select(id_col, vec_col)).mapInPandas(
-            score_blocks,
-            schema=f"id_a {id_dtype}, id_b {id_dtype}, cos_sim double",
-        )
-    else:
-        from anovos_spark.core.utils import fan_out
-
-        # sketching is compute-heavy per row (bits×tables literal-array
-        # dots): fan the scan out so it doesn't run single-task when the
-        # corpus arrives as one parquet row group
-        c1, c2 = fan_out(c1), fan_out(c2)
-        first_vec = corpus.select(vec_col).first()
-        if first_vec is None or first_vec[0] is None:
-            raise ValueError(
-                "embedding_near_dup_pairs: corpus is empty (nothing to index)"
-            )
-        dim = len(first_vec[0])
-        planes = {
-            (t, b): _hyperplane(dim, seed, t, b)
-            for t in range(n_tables)
-            for b in range(n_bits)
-        }
-
-        def sketch(df, id_alias, v_alias, n_alias):
-            rows = []
-            for t in range(n_tables):
-                bits = None
-                for b in range(n_bits):
-                    bit = (_dot_const(F.col(v_alias), planes[(t, b)]) > 0).cast("int")
-                    bits = bit if bits is None else bits * 2 + bit
-                rows.append(F.struct(F.lit(t).alias("t"), bits.alias("bk")))
-            return df.select(
-                id_alias, v_alias, n_alias, F.explode(F.array(*rows)).alias("tb")
-            ).select(id_alias, v_alias, n_alias, "tb.t", "tb.bk")
-
-        sa = sketch(c1, "id_a", "va", "na")
-        sb = sketch(c2, "id_b", "vb", "nb")
-        # skew guard (same contract as dedup's banded joins): a sketch
-        # bucket over bucket_cap members — N identical embeddings land in
-        # one (table, bucket) key — would emit N²/2 pairs from one join
-        # task; such buckets emit a min-id spanning STAR instead
-        # (connectivity-equivalent for near-dup grouping).  Only sa needs
-        # the filter: sb rows in oversized buckets then find no partner.
-        chain_scored = None
-        if bucket_cap is not None:
-            from anovos_spark.operators.dedup import _cap_buckets, _chain_pairs
-
-            sa, over = _cap_buckets(sa, ["t", "bk"], bucket_cap)
-            chain = _chain_pairs(over, ["t", "bk"], "id_a", payload=["va", "na"])
-            chain_scored = chain.select(
-                "id_a",
-                "id_b",
-                F.round(
-                    F.try_divide(
-                        _dot(F.col("va_a"), F.col("va_b")),
-                        F.col("na_a") * F.col("na_b"),
-                    ),
-                    6,
-                ).alias("cos_sim"),
-            )
-        pairs = (
-            sa.join(sb, ["t", "bk"])
-            .where(F.col("id_a") < F.col("id_b"))
-        )
-        # score BEFORE dedup so the distinct shuffles 3 narrow columns, not
-        # the embedding vectors (same (id_a,id_b) always scores identically)
-        scored = pairs.select("id_a", "id_b", score().alias("cos_sim"))
-        if chain_scored is not None:
-            scored = scored.unionByName(chain_scored)
-        scored = scored.distinct()
-    return scored.where(F.col("cos_sim") >= threshold)
+    pairs = sa.join(sb, ["t", "bk"]).where(F.col("id_a") < F.col("id_b"))
+    # score BEFORE dedup so the distinct shuffles 3 narrow columns, not the
+    # embedding vectors (same (id_a,id_b) always scores identically)
+    scored = pairs.select("id_a", "id_b", _cos6("va", "vb", "na", "nb").alias("cos_sim"))
+    if chain_scored is not None:
+        scored = scored.unionByName(chain_scored)
+    return scored.distinct().where(F.col("cos_sim") >= threshold)
 
 
 def _hyperplane(dim: int, seed: int, table: int, bit: int) -> list[float]:
@@ -400,9 +287,6 @@ def lsh_bucket_topk(
     the exact near-dup rewrite; measured ~8 s → ~1 s at sf0.1)."""
     import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
-
-    from anovos_spark.core.utils import fan_out
 
     # null vectors carry no geometry — excluded before sketching
     corpus = corpus.where(F.col(vec_col).isNotNull())
@@ -456,18 +340,9 @@ def lsh_bucket_topk(
     scored = cand.select(
         "query_id",
         "neighbor_id",
-        F.round(
-            F.try_divide(
-                _dot(F.col("query_id_v"), F.col("neighbor_id_v")),
-                F.col("query_id_n") * F.col("neighbor_id_n"),
-            ),
-            6,
-        ).alias("cos_sim"),
+        _cos6("query_id_v", "neighbor_id_v", "query_id_n", "neighbor_id_n").alias("cos_sim"),
     ).distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return top_k_by(scored, "query_id", "cos_sim", "neighbor_id", k)
 
 
 def ivf_topk(
@@ -496,7 +371,6 @@ def ivf_topk(
     O(Q·N) of brute force."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
 
     # null vectors carry no geometry — excluded (KMeans.fit dies on them)
     corpus = corpus.where(F.col(vec_col).isNotNull())
@@ -542,17 +416,9 @@ def ivf_topk(
         F.col("query_id") != F.col("neighbor_id")
     )
     scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            F.try_divide(_dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")),
-            6,
-        ).alias("cos_sim"),
+        "query_id", "neighbor_id", _cos6("qv", "cv", "qn", "cn").alias("cos_sim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return top_k_by(scored, "query_id", "cos_sim", "neighbor_id", k)
 
 
 def ivf_build_index(
@@ -618,8 +484,6 @@ def ivf_query_index(
     vectors scan — correct because only probed cells can produce
     candidates; turn it off for huge streaming query loads where the
     probed set approaches all cells anyway."""
-    from pyspark.sql import Window
-
     centroids_df = spark.read.parquet(f"{path}/centroids").orderBy("cell")
     centroids = [list(map(float, r["centroid"])) for r in centroids_df.collect()]
 
@@ -652,17 +516,9 @@ def ivf_query_index(
         F.col("query_id") != F.col("neighbor_id")
     )
     scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        F.round(
-            F.try_divide(_dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")),
-            6,
-        ).alias("cos_sim"),
+        "query_id", "neighbor_id", _cos6("qv", "cv", "qn", "cn").alias("cos_sim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return top_k_by(scored, "query_id", "cos_sim", "neighbor_id", k)
 
 
 def quantize_embeddings(

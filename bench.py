@@ -5,7 +5,9 @@ reported: a single cold sequential pass lets one noisy scheduler slot
 dominate round-over-round comparison (BASELINE.md documents a migrating
 ±30-40 s band); per-query minima isolate engine cost.
 
-Output contract (driver-parseable):
+Output contract (driver-parseable).  Only the LAST stdout line is
+canonical; readers parse that one.  The full per-query line before it
+is a convenience copy for readers that keep the whole stdout.
 - stdout ends with a compact JSON summary line
   {"metric": "total_query_sec", "value": N, "unit": "sec", "sf": ...,
    "n_queries": N, "n_errors": N, "timing": "min_of_2",

@@ -1346,6 +1346,73 @@ def test_empty_input_guards_named_errors(spark):
     with pytest.raises(ValueError, match="non-empty feature corpus"):
         feature_recommender_match_embedded(attrs, empty_corpus, top_k=1)
 
+    # exact near-dup: an empty corpus and one whose vectors are all null
+    all_null = emb.select("vec_id", F.lit(None).cast("array<double>").alias("embedding"))
+    for corpus in (emb.where(F.lit(False)), all_null):
+        with pytest.raises(ValueError, match="corpus is empty"):
+            SIM.embedding_near_dup_pairs(corpus, threshold=0.45)
+
+
+def test_gemm_kernel_chunk_invariant(spark, monkeypatch):
+    """One-row score chunks give exactly the default-budget output for all
+    three block_cosine callers.  The fixture has exact score ties (1, 2, 7
+    and 10-19 point the same way; so do 3 and 4) that land in different
+    chunks, a zero-norm vector (6, also a query) and self-matches (queries
+    are corpus rows).  Rows arrive in descending id order, so a chunk that
+    broke ties by position instead of by id would pass the wrong
+    neighbors to the rank window."""
+    from anovos_spark.core import gemm
+    from anovos_spark.core.utils import local_frame
+    from anovos_spark.operators.featrec import feature_recommender_match_embedded
+
+    vecs = {
+        1: [1.0, 0.0, 0.0], 2: [2.0, 0.0, 0.0], 3: [0.0, 1.0, 0.0],
+        4: [0.0, 3.0, 0.0], 5: [1.0, 1.0, 0.0], 6: [0.0, 0.0, 0.0],
+        7: [1.0, 0.0, 0.0], 8: [-1.0, 0.0, 1.0],
+        **{i: [3.0, 0.0, 0.0] for i in range(10, 20)},
+    }
+    emb = local_frame(
+        spark, sorted(vecs.items(), reverse=True), "vec_id long, embedding array<double>"
+    )
+    attrs = local_frame(
+        spark, [(f"a{i}", v) for i, v in vecs.items()], "attribute string, emb array<double>"
+    )
+    corpus = local_frame(
+        spark,
+        [(f"f{i}", "ind", "use", v) for i, v in vecs.items() if i in (1, 2, 3, 6, 7)],
+        "feature_name string, industry string, usecase string, emb array<double>",
+    )
+
+    def outputs():
+        qs = emb.where(F.col("vec_id").isin(1, 3, 5, 6))
+        frames = [
+            SIM.brute_force_topk(emb, qs, k=2),
+            SIM.embedding_near_dup_pairs(emb, threshold=0.45, exact=True),
+            feature_recommender_match_embedded(
+                attrs, corpus, attr_emb_col="emb", corpus_emb_col="emb",
+                top_k=2, min_score=-1.0,
+            ),
+        ]
+        return [sorted(map(tuple, f.collect())) for f in frames]
+
+    default = outputs()
+    monkeypatch.setattr(gemm, "SCORE_BLOCK_BYTES", 1)
+    assert outputs() == default
+
+    topk, pairs, rec = default
+    # ties break by id, self-matches never rank, the zero vector scores 0
+    assert [r for r in topk if r[0] == 1] == [(1, 2, 1.0, 1), (1, 7, 1.0, 2)]
+    assert [r for r in topk if r[0] == 3] == [(3, 4, 1.0, 1), (3, 5, 0.707107, 2)]
+    assert [r for r in topk if r[0] == 5] == [(5, 1, 0.707107, 1), (5, 2, 0.707107, 2)]
+    assert [r for r in topk if r[0] == 6] == [(6, 1, 0.0, 1), (6, 2, 0.0, 2)]
+    assert all(q != n for q, n, _, _ in topk)
+    assert (1, 2, 1.0) in pairs and (2, 7, 1.0) in pairs
+    assert not any(6 in (a, b) for a, b, _ in pairs)
+    assert [r for r in rec if r[0] == "a1"] == [
+        ("a1", "f1", "ind", "use", 1.0, 1), ("a1", "f2", "ind", "use", 1.0, 2)
+    ]
+    assert [r[1] for r in rec if r[0] == "a6"] == ["f1", "f2"]
+
 
 def test_cap_buckets_hybrid_split_matches_groupby_reference(spark):
     # r13 hybrid _cap_buckets: the small side is a window-count filter

@@ -10,6 +10,10 @@ Probed paths, each at its documented contract cap:
 - brute_force_topk at the 10k-query broadcast cap (r10: per-chunk
   partial top-k + 64 MB chunking — found by this probe's first draft:
   the unreduced pair stream was 2e9 rows).
+- feature_recommender_match_embedded at the 10k-feature broadcast cap,
+  each Python worker fed one 10k-row Arrow batch of synthesized 64-d
+  attribute vectors (an unchunked score block is 10k × 10k × 8 B =
+  800 MB per worker, plus its np.round copy).
 
 Measurement: a sampler thread polls /proc every 0.25 s during each path
 and records peak RSS for (a) this driver python process, (b) the local
@@ -50,6 +54,11 @@ BUDGETS = {
         "driver_py_gb": 6.0,
         "jvm_gb": 24.0,
         "worker_single_gb": 2.0,  # 64 MB score chunks + top-k selection
+    },
+    "featrec_embedded_10k_features": {
+        "driver_py_gb": 6.0,
+        "jvm_gb": 24.0,
+        "worker_single_gb": 1.0,  # 64 MB score chunks + one Arrow batch
     },
 }
 
@@ -146,6 +155,7 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     from anovos_spark.operators.dedup import near_dup_components
+    from anovos_spark.operators.featrec import feature_recommender_match_embedded
     from anovos_spark.operators.similarity import (
         brute_force_topk, embedding_near_dup_pairs,
     )
@@ -201,6 +211,30 @@ def main():
     qs = emb.orderBy("vec_id").limit(10_000)
     run("brute_topk_10k_queries",
         lambda: brute_force_topk(corpus, qs, k=5).count())
+
+    # 4. embedded recommender at the 10k-feature cap: one range partition
+    # of 10k attributes per core, so each worker's Arrow batch is 10k rows
+    # (spark.sql.execution.arrow.maxRecordsPerBatch); min_score=0.5 keeps
+    # the survivors of 64-d random vectors few, so the gauge reads the
+    # score block, not the output
+    def synth(n, parts, seed):
+        return spark.range(0, n, 1, parts).select(
+            "id", F.array(*[F.randn(seed + j) for j in range(64)]).alias("emb")
+        )
+
+    par = spark.sparkContext.defaultParallelism
+    attrs = synth(par * 10_000, par, 1).select(
+        F.concat(F.lit("attr_"), "id").alias("attribute"), "emb"
+    )
+    feats = synth(10_000, 1, 1000).select(
+        F.concat(F.lit("feat_"), "id").alias("feature_name"),
+        F.lit("synthetic").alias("industry"), F.lit("probe").alias("usecase"), "emb",
+    )
+    run("featrec_embedded_10k_features",
+        lambda: feature_recommender_match_embedded(
+            attrs, feats, attr_emb_col="emb", corpus_emb_col="emb",
+            top_k=2, min_score=0.5,
+        ).count())
 
     sampler.stop()
     results["ok"] = all(p["ok"] for p in results["paths"].values())
