@@ -40,6 +40,35 @@ DEFAULT_CONF = {
 
 MIN_SPARK = (3, 5)
 
+# A local[...] driver JVM is the whole cluster; unless the caller sets
+# spark.driver.memory, its heap is this share of the box's memory.
+LOCAL_DRIVER_MEMORY_FRACTION = 0.25
+
+
+def _box_memory_mb() -> int | None:
+    """MemTotal, or the cgroup memory limit when that is lower."""
+    try:
+        with open("/proc/meminfo") as fh:
+            mb = int(fh.readline().split()[1]) // 1024  # MemTotal, kB
+    except (OSError, ValueError, IndexError):
+        return None
+    for path in ("/sys/fs/cgroup/memory.max", "/sys/fs/cgroup/memory/memory.limit_in_bytes"):
+        try:
+            with open(path) as fh:
+                limit = fh.read().strip()
+        except OSError:
+            continue
+        if limit.isdigit():  # cgroup v2 writes "max" when unlimited
+            mb = min(mb, int(limit) // 2**20)
+        break
+    return mb
+
+
+def _local_driver_memory() -> str:
+    """A quarter of the box's memory (see ``_box_memory_mb``), at least 1g."""
+    mb = _box_memory_mb() or 0
+    return f"{max(1024, int(mb * LOCAL_DRIVER_MEMORY_FRACTION))}m"
+
 
 def require_spark_version(spark: SparkSession) -> None:
     """Fail with a clear message — not a mid-query AnalysisException —
@@ -63,13 +92,22 @@ def get_session(
     master: str | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Get or create a SparkSession with engine defaults applied."""
+    """Get or create a SparkSession with engine defaults applied.
+
+    ``extra_conf`` overlays ``DEFAULT_CONF``.  For a ``local[...]`` master
+    that sets no ``spark.driver.memory``, the driver heap is sized from the
+    box: ``LOCAL_DRIVER_MEMORY_FRACTION`` (0.25) of MemTotal, or of the
+    cgroup memory limit when that is lower, and never under 1g.  Like every
+    static conf, it takes effect only when this call starts the JVM.
+    """
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
     conf = dict(DEFAULT_CONF)
     if extra_conf:
         conf.update(extra_conf)
+    if master and master.startswith("local") and "spark.driver.memory" not in conf:
+        conf["spark.driver.memory"] = _local_driver_memory()
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -37,6 +37,29 @@ os_environ_default = ("ANOVOS_EXACT_STATS", "0")
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def usable_cpus() -> str:
+    """$SPARK_GRAFT_CPUS, else the CPUs this process may run on: the one CPU
+    setting of the bench and of the tools."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def warm_up(spark, sf_dir: str) -> None:
+    """Warm the session so the first timed query doesn't absorb startup
+    cost: JVM init + file index (scan), and the Python/Arrow worker pool —
+    the first pandas stage in a session forks one worker per core and
+    imports pandas/numpy in each; that's session bootstrap, not query
+    cost."""
+    from anovos_spark.queries import table
+
+    table(spark, sf_dir, "lineitem").count()
+
+    def noop(batches):
+        yield from batches
+
+    n = spark.sparkContext.defaultParallelism
+    spark.range(0, n, 1, n).mapInPandas(noop, schema="id long").count()
+
+
 def box_state(sf_dir: str) -> dict:
     """Cheap cache-state marker: 'cache churn' adjudications of a slow
     run should be MEASURED, not inferred from the totals.  Records the
@@ -90,7 +113,7 @@ def main():
     for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(v, "1")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = usable_cpus()
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     detail_path = os.environ.get(
         "SPARK_GRAFT_BENCH_DETAIL",
@@ -101,54 +124,20 @@ def main():
     # cache-state marker BEFORE Spark warms anything
     box = box_state(sf_dir)
 
-    from pyspark.sql import SparkSession
+    from anovos_spark.core.session import get_session
 
-    from anovos_spark.core.session import DEFAULT_CONF
-
-    codegen_cache = "spark.sql.codegen.cache.maxEntries"
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("anovos_spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # engine session default (core/session.py DEFAULT_CONF) the bench
-        # session had never applied: Arrow-backed toPandas/createDataFrame.
-        # The fit-sample pulls in the imputation/autoencoder operators are
-        # driver transfers the guide (§6) puts at 10x+ — measured here:
-        # 600k-row 2-col toPandas 2.1-3.3 s pickled vs 0.21 s Arrow.
-        # Timing methodology (min_of_2, count() action, clearCache)
-        # unchanged; this only aligns the session with the engine's own
-        # declared defaults.
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.executorEnv.OMP_NUM_THREADS", "1")
-        .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
-        .config("spark.executorEnv.MKL_NUM_THREADS", "1")
-        # engine session default: the generated-class cache size (static,
-        # so it must be set here, when the SparkContext is created)
-        .config(codegen_cache, DEFAULT_CONF[codegen_cache])
-        .getOrCreate()
+    # the engine session (Arrow, BLAS pins, codegen cache from DEFAULT_CONF);
+    # the driver heap is sized from the box
+    spark = get_session(
+        "anovos_spark-bench",
+        master=f"local[{cpus}]",
+        extra_conf={"spark.sql.shuffle.partitions": cpus, "spark.ui.enabled": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from anovos_spark.queries import registry, table
+    from anovos_spark.queries import registry
 
-    # warm the session so the first timed query doesn't absorb startup cost:
-    # JVM init + file index (scan), and the Python/Arrow worker pool — the
-    # first pandas stage in a session forks one worker per core and imports
-    # pandas/numpy in each; that's session bootstrap, not query cost
-    table(spark, sf_dir, "lineitem").count()
-    import pandas as _pd
-
-    def _noop(it):
-        for b in it:
-            yield b
-
-    spark.range(0, int(cpus), 1, int(cpus)).mapInPandas(
-        _noop, schema="id long"
-    ).count()
+    warm_up(spark, sf_dir)
 
     detail = {}
     n_errors = 0

@@ -2,30 +2,22 @@ import os
 import sys
 
 import pytest
-from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from anovos_spark.core.session import DEFAULT_CONF  # noqa: E402
-
-# static: it sizes the JVM's generated-class cache once, when this session
-# creates the SparkContext
-CODEGEN_CACHE = "spark.sql.codegen.cache.maxEntries"
+from anovos_spark.core.session import get_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master(os.environ.get("SPARK_GRAFT_TEST_MASTER", "local[4]"))
-        .appName("anovos_spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(CODEGEN_CACHE, DEFAULT_CONF[CODEGEN_CACHE])
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_TEST_MEM", "4g"))
-        .getOrCreate()
+    # the engine session: Arrow, the BLAS pins and the codegen cache all
+    # come from DEFAULT_CONF, and the driver heap is sized from the box
+    spark = get_session(
+        "anovos_spark-tests",
+        master=os.environ.get("SPARK_GRAFT_TEST_MASTER", "local[4]"),
+        extra_conf={"spark.sql.shuffle.partitions": "8", "spark.ui.enabled": "false"},
     )
     yield spark
     spark.stop()

@@ -7,8 +7,8 @@ from the oracles) without this failing.
 The stage parameters in the YAML are the registry queries' parameters,
 so the oracle SQL for funnel_analysis / cohort_retention /
 time_weighted_avg / scd2_versions applies verbatim; frames are
-normalized the way tools/check_oracles.py normalizes (columns sorted by
-name, rows sorted, floats rounded to 6)."""
+normalized the way ``tools/run_registry.py --check oracle`` normalizes
+(columns sorted by name, rows sorted, floats rounded to 6)."""
 
 import math
 import os

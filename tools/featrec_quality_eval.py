@@ -27,8 +27,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from pyspark.sql import SparkSession  # noqa: E402
-
+from anovos_spark.core.session import get_session  # noqa: E402
 from anovos_spark.operators.featrec import (  # noqa: E402
     DEFAULT_CORPUS,
     feature_recommender_match,
@@ -254,12 +253,12 @@ def overlap_at_k(ra, rb, attrs, k=3):
 
 def main() -> None:
     rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 0
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    from bench import usable_cpus
+
+    cpus = usable_cpus()
+    spark = get_session("anovos_spark-featrec-quality", master=f"local[{cpus}]",
+                        extra_conf={"spark.sql.shuffle.partitions": cpus,
+                                    "spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     identity_pairs = [(name, name) for name, _, _, _ in DEFAULT_CORPUS]

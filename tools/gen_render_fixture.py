@@ -51,15 +51,14 @@ def build(spark, sf_dir: str, out_dir: str) -> str:
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
+    from bench import usable_cpus
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from anovos_spark.core.session import get_session
+
+    cpus = usable_cpus()
+    spark = get_session("anovos_spark-render-fixture", master=f"local[{cpus}]",
+                        extra_conf={"spark.sql.shuffle.partitions": cpus,
+                                    "spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     base = os.path.join(ROOT, ".render_check")

@@ -46,18 +46,17 @@ def main():
     FACT_SHIFT = int(sys.argv[3]) if len(sys.argv) > 3 else 10_000_000
     os.makedirs(out_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
+    from bench import usable_cpus
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "64")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # 10x fan-out of a 6M-row src needs real heap (sf10 OOMed at 1g)
-        .config("spark.driver.memory", os.environ.get("GEN_DRIVER_MEM", "48g"))
-        .getOrCreate()
-    )
+    from anovos_spark.core.session import get_session
+
+    # the 10x fan-out of a 6M-row src needs real heap (sf10 OOMed at 1g):
+    # get_session sizes it from the box
+    cpus = usable_cpus()
+    spark = get_session("anovos_spark-gen-scale-data", master=f"local[{cpus}]",
+                        extra_conf={"spark.sql.shuffle.partitions": str(2 * int(cpus)),
+                                    "spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = spark.read.parquet(f"{SRC}/documents.parquet")

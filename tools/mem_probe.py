@@ -131,16 +131,15 @@ def main():
     rnd = os.environ.get("MEM_PROBE_ROUND", "10")
     out_json = sys.argv[2] if len(sys.argv) > 2 else f"MEM_PROBE_r{rnd}.json"
 
-    from pyspark.sql import SparkSession
+    from bench import usable_cpus
     from pyspark.sql import functions as F
 
-    cpus = os.environ.get("ORACLE_CHECK_CPUS", "16")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("mem-probe")
-        .config("spark.sql.shuffle.partitions", str(2 * int(cpus)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
+    from anovos_spark.core.session import get_session
+
+    cpus = usable_cpus()
+    spark = get_session("anovos_spark-mem-probe", master=f"local[{cpus}]", extra_conf={
+        "spark.sql.shuffle.partitions": str(2 * int(cpus)),
+        "spark.ui.enabled": "false",
         # 12g, not 20g (VERDICT r10 item #7): a JVM's RSS grows toward
         # Xmx under allocation load before GC bothers compacting, so the
         # r10 "21.8 GB peak vs 24 budget = 91%" was mostly configured-heap
@@ -149,9 +148,8 @@ def main():
         # inside a 12g JVM, peak RSS ~13 GB, >= 45% headroom against the
         # 24 GB budget — and a future breach means the workload genuinely
         # outgrew the heap, not that GC got lazy.
-        .config("spark.driver.memory", os.environ.get("ORACLE_CHECK_MEM", "12g"))
-        .getOrCreate()
-    )
+        "spark.driver.memory": "12g",
+    })
     spark.sparkContext.setLogLevel("ERROR")
 
     from anovos_spark.operators.dedup import near_dup_components

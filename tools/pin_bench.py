@@ -36,6 +36,9 @@ import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from bench import usable_cpus  # noqa: E402
 
 
 def run_rep(sf_dir: str, detail_path: str) -> tuple[int, str, dict | None]:
@@ -111,7 +114,7 @@ def main() -> None:
     envelope = {
         "n": rnd,
         "rc": max(r[0] for r in rep_rows),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": int(usable_cpus()),
         "sf": (med_parsed or {}).get("sf"),
         "tail": med_tail,
         "parsed": med_parsed,

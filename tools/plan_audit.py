@@ -79,15 +79,15 @@ def _find_row_udf_calls(path: str) -> list[int]:
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    from pyspark.sql import SparkSession
+    from bench import usable_cpus
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "16")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    from anovos_spark.core.session import get_session
+
+    cpus = usable_cpus()
+    spark = get_session("anovos_spark-plan-audit", master=f"local[{cpus}]",
+                        extra_conf={"spark.sql.shuffle.partitions": str(2 * int(cpus)),
+                                    "spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     import anovos_spark.queries as Q
 

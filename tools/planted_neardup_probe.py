@@ -31,7 +31,6 @@ Usage: python tools/planted_neardup_probe.py [sf_dir] [out_json]
 from __future__ import annotations
 
 import json
-import os
 import sys
 import time
 
@@ -128,18 +127,14 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else ".scaledata/sf10"
     out_json = sys.argv[2] if len(sys.argv) > 2 else None
 
-    from pyspark.sql import SparkSession
+    from bench import usable_cpus
 
-    cpus = os.environ.get("ORACLE_CHECK_CPUS", "16")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("planted-neardup-probe")
-        .config("spark.sql.shuffle.partitions", str(2 * int(cpus)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("ORACLE_CHECK_MEM", "16g"))
-        .getOrCreate()
-    )
+    from anovos_spark.core.session import get_session
+
+    cpus = usable_cpus()
+    spark = get_session("anovos_spark-planted-neardup", master=f"local[{cpus}]",
+                        extra_conf={"spark.sql.shuffle.partitions": str(2 * int(cpus)),
+                                    "spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

@@ -38,17 +38,15 @@ def main():
     n_dup = int(sys.argv[1]) if len(sys.argv) > 1 else 30_000
     n_tail = max(1000, n_dup // 10)
 
-    from pyspark.sql import SparkSession
+    from bench import usable_cpus
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
+    from anovos_spark.core.session import get_session
+
+    cpus = usable_cpus()
+    spark = get_session("anovos_spark-skew-probe", master=f"local[{cpus}]",
+                        extra_conf={"spark.sql.shuffle.partitions": str(2 * int(cpus)),
+                                    "spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     from anovos_spark.operators import dedup as DD
